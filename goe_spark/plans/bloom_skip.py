@@ -35,13 +35,18 @@ test suite's invariant, not a hope).
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goe_spark.functions.hashing import MERSENNE_P, hash64, minhash_coeffs
+from goe_spark.plans.metadata import atomic_write_json
+from goe_spark.plans.swap import (
+    for_each_partition,
+    partition_dirs,
+    read_manifest_entries,
+)
 
 M_BITS = 1024  # filter width per (file, column)
 K_HASHES = 4  # probes per value
@@ -100,9 +105,26 @@ def build_bloom_manifest(
         for r in rows:
             fname = os.path.basename(r[_FILE])
             manifest.setdefault(fname, {})[col] = [int(p) for p in r.ps]
-    with open(_mpath(path), "w") as fh:
-        json.dump(manifest, fh)
+    atomic_write_json(_mpath(path), manifest, indent=None)
     return manifest
+
+
+def _prune(
+    path: str, probes: dict[str, list[list[int]]]
+) -> tuple[list[str], int]:
+    """Files that may hold, for every probed column they index, at
+    least one of its values (as bit positions); (survivors, total)."""
+    entries = read_manifest_entries(path, BLOOM_MANIFEST_NAME)
+
+    def may_hold(entry: dict | None) -> bool:
+        for c, values in probes.items():
+            bits = (entry or {}).get(c)
+            if bits is not None and not any(map(set(bits).issuperset, values)):
+                return False
+        return True
+
+    out = [f for f, entry in entries if may_hold(entry)]
+    return out, len(entries)
 
 
 def prune_files_bloom(
@@ -113,37 +135,7 @@ def prune_files_bloom(
     column it has a filter for, all k positions are set. Files absent
     from the manifest (written after the build) survive — correct,
     just unpruned. Returns (surviving file paths, total data files)."""
-    data_files = [
-        f
-        for f in os.listdir(path)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    ]
-    try:
-        with open(_mpath(path)) as fh:
-            manifest = json.load(fh)
-    except FileNotFoundError:
-        return [os.path.join(path, f) for f in sorted(data_files)], len(
-            data_files
-        )
-    probe = {c: value_positions(v) for c, v in equals.items()}
-    out = []
-    for f in sorted(data_files):
-        entry = manifest.get(f)
-        if entry is None:
-            out.append(os.path.join(path, f))
-            continue
-        ok = True
-        for c, poss in probe.items():
-            bits = entry.get(c)
-            if bits is None:
-                continue  # column not indexed in this file: no claim
-            bitset = set(bits)
-            if not all(p in bitset for p in poss):
-                ok = False
-                break
-        if ok:
-            out.append(os.path.join(path, f))
-    return out, len(data_files)
+    return _prune(path, {c: [value_positions(v)] for c, v in equals.items()})
 
 
 def read_pruned_bloom(
@@ -160,37 +152,19 @@ def read_pruned_bloom(
 # --- partitioned layouts -------------------------------------------------
 
 
-def partition_dirs(path: str) -> list[str]:
-    """Immediate child partition directories of a Hive-partitioned
-    root (plus the Hive null dir)."""
-    return sorted(
-        d
-        for d in os.listdir(path)
-        if os.path.isdir(os.path.join(path, d)) and not d.startswith(".")
-    )
-
-
 def build_bloom_manifest_partitioned(
     spark: SparkSession, path: str, cols: list[str]
 ) -> int:
     """One Bloom manifest per partition directory; returns the number
-    of partitions indexed. Each partition's build is independent, so
-    an incremental pipeline rebuilds only partitions it rewrote."""
+    of partitions indexed. Each partition's build is independent (run
+    from plans/swap.py's driver pool), so an incremental pipeline
+    rebuilds only partitions it rewrote."""
     dirs = partition_dirs(path)
-    # Each partition's build is one small independent Spark job
-    # writing its own manifest file; overlap them from a driver
-    # thread pool (guide §2.6) instead of running a month-partitioned
-    # table's dozens of tiny actions back to back — same discipline
-    # as zorder_partitioned_table.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
 
     def _one(d: str) -> None:
         build_bloom_manifest(spark, os.path.join(path, d), cols)
 
-    with ThreadPoolExecutor(max_workers=max(1, min(4, len(dirs)))) as tp:
-        list(tp.map(inheritable_thread_target(spark)(_one), dirs))
+    for_each_partition(spark, _one, dirs)
     return len(dirs)
 
 
@@ -201,29 +175,7 @@ def prune_files_bloom_in(
     FLAT directory: a file survives iff at least one key's positions
     are all set (or the file/column is unindexed). Same no-false-
     negative contract as the single-value probe."""
-    data_files = [
-        f
-        for f in os.listdir(path)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    ]
-    try:
-        with open(_mpath(path)) as fh:
-            manifest = json.load(fh)
-    except FileNotFoundError:
-        return [os.path.join(path, f) for f in sorted(data_files)], len(
-            data_files
-        )
-    probes = [value_positions(k) for k in keys]
-    out = []
-    for f in sorted(data_files):
-        bits = (manifest.get(f) or {}).get(col)
-        if bits is None:
-            out.append(os.path.join(path, f))
-            continue
-        bitset = set(bits)
-        if any(all(p in bitset for p in ps) for ps in probes):
-            out.append(os.path.join(path, f))
-    return out, len(data_files)
+    return _prune(path, {col: [value_positions(k) for k in keys]})
 
 
 def prune_partitioned_bloom_in(
@@ -240,14 +192,3 @@ def prune_partitioned_bloom_in(
         files.extend(sub)
         total += n
     return files, total
-
-
-def drop_bloom_manifest(dir_path: str) -> None:
-    """Remove a (now stale) manifest after its files were rewritten.
-    Pruning stays correct either way — rewritten files get fresh
-    names that miss the manifest and therefore survive — but a
-    dropped manifest never makes even a stale no-claim."""
-    try:
-        os.remove(_mpath(dir_path))
-    except FileNotFoundError:
-        pass

@@ -11,18 +11,12 @@ read); only partitions whose file count exceeds the threshold are
 rewritten. Rewrites are per-partition so restart scope is one
 partition, and untouched partitions keep their files byte-identical.
 
-Crash safety (directories cannot be renamed atomically over data):
-the swap is marker-driven. Compacted data is written to a DOT-PREFIXED
-temp dir (invisible to Spark readers and to the partition scan), a
-swap marker recording the old file list is written atomically, and
-only then are old files deleted and new files moved in; the marker is
-removed last. Every run begins by HEALING: a marker found on disk
-means a crash interrupted a swap, and the heal completes it (delete
-listed old files still present, move remaining temp files in).
-Marker-less temp dirs are leftovers from a crash before the marker
-and are discarded — the partition is still intact and will simply be
-recompacted. The only externally visible inconsistency is the window
-after a crash mid-swap and before the next run's heal.
+Crash safety is plans/swap.py's marker swap, the one rewrite path
+shared with targeted delete, merge and partitioned z-order: the
+compacted copy is complete and row-checked in a hidden temp dir
+before the partition is touched, and every run first heals a swap a
+crash interrupted. Partitions are compacted from swap's bounded
+driver pool.
 
 At 100 TB you run this as a background janitor over partitions the
 chunker has finished with (HWM-closed partitions never receive new
@@ -31,14 +25,18 @@ appends, so compaction and ingest don't race).
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
-from goe_spark.plans.metadata import atomic_write_json
+from goe_spark.plans.swap import (
+    data_files,
+    for_each_partition,
+    heal_interrupted_swaps,
+    partition_dirs,
+    rewrite_partition,
+)
 
 
 @dataclass
@@ -49,70 +47,6 @@ class CompactionReport:
     files_before: int = 0
     files_after: int = 0
     details: list = field(default_factory=list)  # (partition, before, after)
-
-
-def _data_files(d: str) -> list[str]:
-    return [
-        f
-        for f in os.listdir(d)
-        if not f.startswith(("_", ".")) and os.path.isfile(os.path.join(d, f))
-    ]
-
-
-def _tmp_dir(path: str, d: str) -> str:
-    # Dot-prefixed: invisible to Spark readers AND to the partition
-    # scan (which matches 'partition_col=' prefixes).
-    return os.path.join(path, f".{d}._compact_tmp")
-
-
-def _marker_path(path: str, d: str) -> str:
-    return os.path.join(path, f".compact_swap.{d}.json")
-
-
-def _complete_swap(path: str, d: str, old_files: list[str]) -> int:
-    """Finish a marker-recorded swap: remove listed old files still
-    present, move remaining temp files in, clean up. Idempotent.
-    Returns the partition's final data-file count."""
-    full = os.path.join(path, d)
-    tmp = _tmp_dir(path, d)
-    for f in old_files:
-        p = os.path.join(full, f)
-        if os.path.exists(p):
-            os.remove(p)
-    if os.path.isdir(tmp):
-        for f in _data_files(tmp):
-            shutil.move(os.path.join(tmp, f), os.path.join(full, f))
-        shutil.rmtree(tmp)
-    # Any rewrite through this swap (compaction, targeted delete,
-    # merge, zorder-partitioned) invalidates the partition's bloom
-    # manifest: the files it described are gone. Pruning would stay
-    # CORRECT with a stale manifest (fresh file names miss it and
-    # survive), but a dropped manifest never even makes a stale
-    # no-claim; rebuild with `cli bloom` after maintenance.
-    from goe_spark.plans.bloom_skip import drop_bloom_manifest
-
-    drop_bloom_manifest(full)
-    os.remove(_marker_path(path, d))
-    return len(_data_files(full))
-
-
-def heal_interrupted_swaps(path: str) -> list[str]:
-    """Complete any swap a crash interrupted (marker present) and
-    discard marker-less temp dirs (crash before the marker — the
-    partition is still intact). Returns healed partition names."""
-    healed = []
-    for name in sorted(os.listdir(path)):
-        if name.startswith(".compact_swap.") and name.endswith(".json"):
-            with open(os.path.join(path, name)) as fh:
-                marker = json.load(fh)
-            _complete_swap(path, marker["partition"], marker["old_files"])
-            healed.append(marker["partition"])
-    for name in sorted(os.listdir(path)):
-        if name.endswith("._compact_tmp") and not os.path.exists(
-            _marker_path(path, name[1 : -len("._compact_tmp")])
-        ):
-            shutil.rmtree(os.path.join(path, name))
-    return healed
 
 
 def compact_partitioned_table(
@@ -129,39 +63,24 @@ def compact_partitioned_table(
     healing any swap a previous crash interrupted."""
     report = CompactionReport()
     report.partitions_healed = len(heal_interrupted_swaps(path))
-    part_dirs = [
-        d
-        for d in sorted(os.listdir(path))
-        if d.startswith(f"{partition_col}=")
-        and os.path.isdir(os.path.join(path, d))
-    ]
-    for d in part_dirs:
-        full = os.path.join(path, d)
-        files = _data_files(full)
+    todo: dict[str, int] = {}  # partition -> files before
+    for d in partition_dirs(path, partition_col):
+        n = len(data_files(os.path.join(path, d)))
         report.partitions_scanned += 1
-        report.files_before += len(files)
-        if len(files) <= max_files_per_partition:
-            report.files_after += len(files)
-            continue
-        df = spark.read.parquet(full)
-        n_before = df.count()
-        tmp = _tmp_dir(path, d)
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
+        report.files_before += n
+        if n > max_files_per_partition:
+            todo[d] = n
+        else:
+            report.files_after += n
+
+    def coalesce(df, tmp):
         df.coalesce(target_files).write.mode("overwrite").parquet(tmp)
-        n_after = spark.read.parquet(tmp).count()
-        if n_after != n_before:  # pragma: no cover - defensive
-            shutil.rmtree(tmp)
-            raise RuntimeError(
-                f"compaction row mismatch in {d}: {n_before} -> {n_after}"
-            )
-        # Marker BEFORE touching the partition: from here a crash at
-        # any point is completed by the next run's heal.
-        atomic_write_json(
-            _marker_path(path, d), {"partition": d, "old_files": files}
-        )
-        moved = _complete_swap(path, d, files)
+
+    def compact(d):
+        return rewrite_partition(spark, path, d, coalesce)
+
+    for rw in for_each_partition(spark, compact, list(todo)):
         report.partitions_compacted += 1
-        report.files_after += moved
-        report.details.append((d, len(files), moved))
+        report.files_after += rw.files_after
+        report.details.append((rw.partition, todo[rw.partition], rw.files_after))
     return report

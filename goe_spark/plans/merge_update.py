@@ -16,9 +16,10 @@ Spark-first shape, with a durable write-ahead:
   marker. From this point the new row versions exist on disk, so no
   later crash can lose data that exists nowhere durable.
 - Phase A deletes the existing versions of the updated keys via
-  plans/targeted_delete — partition-bounded rewrites behind the
-  marker-driven crash-safe swap, affected directories taken from
-  (URL-decoded) input_file_name.
+  plans/targeted_delete — partition-bounded rewrites behind
+  plans/swap.py's marker-driven crash-safe swap (the one rewrite
+  path), affected directories taken from (URL-decoded)
+  input_file_name.
 - Phase B appends the STAGED rows with
   ``write.partitionBy(partition_col)`` — Spark itself lays out the
   directories (padding, Hive escaping, __HIVE_DEFAULT_PARTITION__ for

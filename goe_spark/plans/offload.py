@@ -696,6 +696,7 @@ class OffloadPipeline:
         # on the Spark-native parquet writer; warehouse backends
         # cluster natively (BigQuery CLUSTER BY via sort_cols).
         if cfg.zorder_columns_csv and hasattr(writer, "target_dir"):
+            from goe_spark.plans.swap import flat_swap
             from goe_spark.plans.zorder import (
                 write_zordered,
                 zorder_partitioned_table,
@@ -715,24 +716,16 @@ class OffloadPipeline:
                         partition_col=SYNTHETIC_COL,
                     )
                 else:
-                    # Flat target: same tmp + two-rename swap as the
-                    # CLI zorder path (healed by plans/heal.py). An
+                    # Flat target: plans/swap.py's two-rename swap. An
                     # in-place overwrite backed only by localCheckpoint
                     # would destroy the verified table on a crash or
                     # executor loss mid-write.
-                    import shutil
-
-                    t = writer.target_dir.rstrip("/")
-                    tmp, old = f"{t}.zorder_tmp", f"{t}.zorder_old"
-                    for stale in (tmp, old):
-                        if os.path.isdir(stale):
-                            shutil.rmtree(stale)
-                    write_zordered(
-                        writer.read_final(self.spark), tmp, zcols
+                    flat_swap(
+                        writer.target_dir.rstrip("/"),
+                        lambda tmp: write_zordered(
+                            writer.read_final(self.spark), tmp, zcols
+                        ),
                     )
-                    os.rename(t, old)
-                    os.rename(tmp, t)
-                    shutil.rmtree(old)
 
         return OffloadResult(
             rows_staged=rows_staged,

@@ -9,12 +9,13 @@ the affected set is exact file-system truth (no reconstruction of
 directory names from partition values, which breaks on type-inferred
 reads: lpad-padded numerics, Hive-escaped characters,
 __HIVE_DEFAULT_PARTITION__). Phase 2 rewrites ONLY those directories
-with the key anti-filter, reusing compaction's marker-driven
-crash-safe swap, so untouched partitions stay byte-identical. At
+with the key anti-filter, through plans/swap.py's marker-driven
+crash-safe swap (the one rewrite path, run from its bounded driver
+pool), so untouched partitions stay byte-identical. At
 100 TB a delete of k keys costs O(affected partitions), never a table
 rewrite.
 
-Crash safety is compaction's: temp dir -> marker -> swap -> unmark,
+Crash safety is plans/swap.py's: temp dir -> marker -> swap -> unmark,
 healed on the next run. A crash between phase-2 partitions resumes by
 re-running the delete (already-rewritten partitions simply match no
 keys on the second pass).
@@ -22,24 +23,16 @@ keys on the second pass).
 
 from __future__ import annotations
 
-import os
-import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from goe_spark.plans.compaction import (
-    _complete_swap,
-    _data_files,
-    _marker_path,
-    _tmp_dir,
+from goe_spark.plans.swap import (
+    for_each_partition,
     heal_interrupted_swaps,
+    rewrite_partition,
 )
-from goe_spark.plans.metadata import atomic_write_json
-
-HIVE_NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
-
 
 FILE_COL = "_goe_src_file"
 
@@ -167,42 +160,33 @@ def delete_rows(
     report.keys_matched = (
         matches.select(key_column).distinct().count()
     )
-    for d in affected_partition_dirs(matches):
-        if d != HIVE_NULL_DIR and not d.startswith(f"{partition_col}="):
+    dirs = affected_partition_dirs(matches)
+    for d in dirs:
+        if not d.startswith(f"{partition_col}="):
             # A matching file NOT under a partition dir means the
             # layout assumption is wrong — refuse rather than skip.
             raise ValueError(
                 f"matched file outside the partition layout: {d!r}"
             )
-        full = os.path.join(path, d)
-        old_files = _data_files(full)
-        part_df = spark.read.parquet(full)
-        n_before = part_df.count()
-        kept = anti(part_df)
-        tmp = _tmp_dir(path, d)
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        kept.write.mode("overwrite").parquet(tmp)
-        n_after = spark.read.parquet(tmp).count()
-        if n_after >= n_before:
-            # input_file_name said this dir holds doomed rows; a no-op
-            # rewrite means the scans disagreed — don't swap files for
-            # nothing.
-            shutil.rmtree(tmp)
-            if n_after == n_before:
-                continue
-            raise RuntimeError(  # pragma: no cover - defensive
-                f"delete grew partition {d}: {n_before} -> {n_after}"
-            )
-        atomic_write_json(
-            _marker_path(path, d), {"partition": d, "old_files": old_files}
+
+    def rewrite(d):
+        # input_file_name said this dir holds doomed rows; an
+        # unchanged count means the scans disagreed, and the swap
+        # is skipped rather than swapping files for nothing.
+        return rewrite_partition(
+            spark,
+            path,
+            d,
+            lambda df, tmp: anti(df).write.mode("overwrite").parquet(tmp),
+            removes_rows=True,
         )
-        # _complete_swap drops the partition's now-stale bloom
-        # manifest for every rewrite path (see compaction.py).
-        _complete_swap(path, d, old_files)
+
+    for rw in for_each_partition(spark, rewrite, dirs):
+        if rw.files_after is None:
+            continue
         report.partitions_affected += 1
-        report.rows_deleted += n_before - n_after
-        report.details.append((d, n_before - n_after))
+        report.rows_deleted += rw.rows_before - rw.rows_after
+        report.details.append((rw.partition, rw.rows_before - rw.rows_after))
     if maintain_indexes:
         from goe_spark.operators.index_maintenance import evict_keys
 

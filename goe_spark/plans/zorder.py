@@ -38,7 +38,6 @@ not implemented, rejected loudly.
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 
@@ -49,6 +48,15 @@ from pyspark.sql.types import (
     NumericType,
     TimestampNTZType,
     TimestampType,
+)
+
+from goe_spark.plans.metadata import atomic_write_json
+from goe_spark.plans.swap import (
+    for_each_partition,
+    heal_interrupted_swaps,
+    partition_dirs,
+    read_manifest_entries,
+    rewrite_partition,
 )
 
 BITS = 16  # rank bits per column; 4 columns max fills a signed long
@@ -275,8 +283,6 @@ def build_manifest(
         }
         for r in per_file
     }
-    from goe_spark.plans.metadata import atomic_write_json
-
     atomic_write_json(_mpath(path), manifest)
     return manifest
 
@@ -287,28 +293,28 @@ def prune_files(
     """Files whose manifest ranges intersect EVERY (lo, hi) bound
     (None = unbounded on that side; bounds on the rank scale — epoch
     days/micros for temporal columns). Returns (surviving file paths,
-    total file count). A file with NULL-only bounds for a bounded
-    column is skipped — range predicates never match NULL."""
-    with open(_mpath(path)) as fh:
-        manifest = json.load(fh)
-    survivors = []
-    for fname, colstats in manifest.items():
-        keep = True
-        for c, (lo, hi) in bounds.items():
-            if c not in colstats:
-                raise KeyError(f"{c!r} not in zorder manifest for {path}")
-            fmin, fmax = colstats[c]
-            if fmin is None:
-                keep = False
-                break
-            if (lo is not None and fmax < lo) or (
-                hi is not None and fmin > hi
-            ):
-                keep = False
-                break
-        if keep:
-            survivors.append(os.path.join(path, fname))
-    return survivors, len(manifest)
+    total data files). Files the manifest does not describe survive.
+    A file with NULL-only bounds for a bounded column is skipped —
+    range predicates never match NULL."""
+    entries = read_manifest_entries(path, MANIFEST_NAME)
+    survivors = [
+        f
+        for f, colstats in entries
+        if colstats is None or _intersects(colstats, bounds, path)
+    ]
+    return survivors, len(entries)
+
+
+def _intersects(colstats: dict, bounds: dict, path: str) -> bool:
+    for c, (lo, hi) in bounds.items():
+        if c not in colstats:
+            raise KeyError(f"{c!r} not in zorder manifest for {path}")
+        fmin, fmax = colstats[c]
+        if fmin is None:
+            return False
+        if (lo is not None and fmax < lo) or (hi is not None and fmin > hi):
+            return False
+    return True
 
 
 def read_pruned(
@@ -342,87 +348,39 @@ def zorder_partitioned_table(
     rank: str = "linear",
 ) -> PartitionedZorderReport:
     """Re-cluster EVERY partition of a Hive-partitioned target on the
-    Morton curve, each behind compaction's marker-driven crash-safe
+    Morton curve, each behind plans/swap.py's marker-driven crash-safe
     swap — so zorder composes with the offload layout instead of
     refusing it (the flat CLI path): partition pruning on
     ``partition_col`` stays native, and the per-partition manifest
     adds file skipping WITHIN each partition.
 
-    Crash contract is compaction's: the clustered copy is complete in
-    a dot-prefixed temp dir before the marker arms; any crash is
-    healed by the next run (which this one begins with). The old
-    manifest is removed IN the swap and the fresh one written after —
-    a crash in between leaves a manifest-less partition, which
-    read_pruned_partitioned treats as unprunable-but-correct (reads
-    all its files) until the next zorder pass."""
-    from goe_spark.plans.compaction import (
-        _complete_swap,
-        _data_files,
-        _marker_path,
-        _tmp_dir,
-        heal_interrupted_swaps,
-    )
-    from goe_spark.plans.metadata import atomic_write_json
-
+    The clustered copy and its manifest are complete in the swap's
+    temp dir before the marker arms; file names survive the move, so
+    the manifest moves in with the files and stays valid. Any crash
+    is healed by the next run (which this one begins with).
+    Partitions are rewritten from swap's bounded driver pool."""
     report = PartitionedZorderReport()
     report.partitions_healed = len(heal_interrupted_swaps(path))
-    part_dirs = [
-        d
-        for d in sorted(os.listdir(path))
-        if d.startswith(f"{partition_col}=")
-        and os.path.isdir(os.path.join(path, d))
-    ]
+    part_dirs = partition_dirs(path, partition_col)
     if not part_dirs:
         raise ValueError(
             f"{path} has no {partition_col}= partition directories; "
             "use write_zordered for flat tables"
         )
-    import shutil
 
-    def _rewrite_one(d: str) -> int:
-        full = os.path.join(path, d)
-        old_files = _data_files(full)
-        df = spark.read.parquet(full)
-        n_before = df.count()
-        tmp = _tmp_dir(path, d)
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        write_zordered(df, tmp, cols, n_files=n_files, rank=rank)
-        # The temp manifest described the temp paths; drop it — the
-        # real one is rebuilt on the final dir after the swap.
-        os.remove(_mpath(tmp))
-        if spark.read.parquet(tmp).count() != n_before:
-            shutil.rmtree(tmp)  # pragma: no cover - defensive
-            raise RuntimeError(f"zorder row mismatch in {d}")
-        doomed = list(old_files)
-        if os.path.exists(_mpath(full)):
-            doomed.append(MANIFEST_NAME)  # stale manifest dies in-swap
-        atomic_write_json(
-            _marker_path(path, d), {"partition": d, "old_files": doomed}
+    def rewrite(d: str):
+        return rewrite_partition(
+            spark,
+            path,
+            d,
+            lambda df, tmp: write_zordered(
+                df, tmp, cols, n_files=n_files, rank=rank
+            ),
         )
-        n_after = _complete_swap(path, d, doomed)
-        build_manifest(spark, full, cols)
-        return n_after
 
-    # Partitions are INDEPENDENT (own dirs, own markers, own temp
-    # dirs), so a driver thread pool overlaps the per-partition
-    # rewrite jobs instead of running a month-partitioned table's
-    # dozens of tiny actions strictly back to back (guide §2.6 —
-    # 3-4 jobs in flight fills each job's straggler tail). The crash
-    # contract is per partition and unchanged: a failure mid-pool
-    # leaves every partition either swapped or marker-armed, and the
-    # next run's heal pass completes the armed ones.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    workers = max(1, min(4, len(part_dirs)))
-    with ThreadPoolExecutor(max_workers=workers) as tp:
-        for n_after in tp.map(
-            inheritable_thread_target(spark)(_rewrite_one), part_dirs
-        ):
-            report.files_after += n_after
-            report.partitions_rewritten += 1
+    for rw in for_each_partition(spark, rewrite, part_dirs):
+        report.files_after += rw.files_after
+        report.partitions_rewritten += 1
     return report
 
 
@@ -437,24 +395,12 @@ def read_pruned_partitioned(
     partition contributes all its files — correct, just unpruned);
     the union reads with basePath so ``partition_col`` survives.
     Returns (DataFrame | None, files_read, files_total)."""
-    from goe_spark.plans.compaction import _data_files
-
     files: list[str] = []
     total = 0
-    for d in sorted(os.listdir(path)):
-        full = os.path.join(path, d)
-        if not (d.startswith(f"{partition_col}=") and os.path.isdir(full)):
-            continue
-        if os.path.exists(_mpath(full)):
-            keep, n = prune_files(full, bounds)
-            files.extend(keep)
-            total += n
-        else:
-            part_files = [
-                os.path.join(full, f) for f in _data_files(full)
-            ]
-            files.extend(part_files)
-            total += len(part_files)
+    for d in partition_dirs(path, partition_col):
+        keep, n = prune_files(os.path.join(path, d), bounds)
+        files.extend(keep)
+        total += n
     if not files:
         return None, 0, total
     return (

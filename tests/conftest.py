@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 
 import pytest
@@ -44,17 +45,17 @@ def duck():
     yield con
 
 
-@pytest.fixture
-def offloaded_orders(spark, tmp_path):
-    """Orders offloaded to a month-partitioned parquet target — shared
-    by the targeted-delete and merge test suites. Returns
-    (target_dir, source_df, PartitionSpec)."""
+@pytest.fixture(scope="session")
+def _offloaded_orders_once(spark, tmp_path_factory):
+    """One offload of orders to a month-partitioned parquet target per
+    session; tests take private copies through ``offloaded_orders``."""
     from goe_spark.plans.offload import (
         OffloadConfig,
         OffloadPipeline,
         PartitionSpec,
     )
 
+    root = tmp_path_factory.mktemp("offloaded_orders")
     spec = PartitionSpec(
         source_column="o_orderdate", kind="date", granularity="M"
     )
@@ -62,13 +63,29 @@ def offloaded_orders(spark, tmp_path):
     cfg = OffloadConfig(
         owner="tpch",
         table_name="orders",
-        target_dir=str(tmp_path / "final"),
-        staging_dir=str(tmp_path / "staging"),
-        metadata_dir=str(tmp_path / "meta"),
+        target_dir=str(root / "final"),
+        staging_dir=str(root / "staging"),
+        metadata_dir=str(root / "meta"),
         partition=spec,
     )
     OffloadPipeline(spark, cfg).run(src)
-    return cfg.target_dir, src, spec
+    return root, spec
+
+
+@pytest.fixture
+def offloaded_orders(spark, _offloaded_orders_once, tmp_path):
+    """Orders offloaded to a month-partitioned parquet target — shared
+    by the targeted-delete and merge test suites. Each test gets its
+    own copy of the session's offload (final/, staging/ and meta/
+    under its tmp_path) and its own source DataFrame (tests may
+    mutate its cached schema). Returns (target_dir, source_df,
+    PartitionSpec)."""
+    root, spec = _offloaded_orders_once
+    src = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
+    for sub in ("final", "staging", "meta"):
+        if os.path.exists(root / sub):
+            shutil.copytree(root / sub, tmp_path / sub)
+    return str(tmp_path / "final"), src, spec
 
 
 def partition_file_map(path):

@@ -4,6 +4,7 @@ driver/engine hash agreement."""
 from __future__ import annotations
 
 import hypothesis.strategies as st
+import pytest
 from hypothesis import given, settings
 from pyspark.sql import functions as F
 
@@ -12,6 +13,7 @@ from goe_spark.plans.bloom_skip import (
     M_BITS,
     build_bloom_manifest,
     prune_files_bloom,
+    prune_files_bloom_in,
     read_pruned_bloom,
     value_positions,
 )
@@ -159,3 +161,29 @@ def test_partitioned_build_and_delete_integration(spark, offloaded_orders):
         spark, target, "o_orderkey", [-1, -2], use_bloom=True
     )
     assert rep2.rows_deleted == 0 and rep2.partitions_affected == 0
+
+
+def test_torn_manifest_write_keeps_previous_manifest(
+    spark, tmp_path, monkeypatch
+):
+    """A crash while the manifest is written must not leave a torn
+    file that breaks every later probe."""
+    import json
+
+    path = str(tmp_path / "bloomed3")
+    _write_fixture(spark, path)
+    build_bloom_manifest(spark, path, ["doc_id"])
+    files, total = prune_files_bloom(path, {"doc_id": 1500})
+
+    def torn(obj, fh, *args, **kwargs):
+        fh.write(json.dumps(obj)[:40])
+        raise OSError("disk full")
+
+    with monkeypatch.context() as m:
+        m.setattr(json, "dump", torn)
+        with pytest.raises(OSError):
+            build_bloom_manifest(spark, path, ["doc_id"])
+
+    assert prune_files_bloom(path, {"doc_id": 1500}) == (files, total)
+    survivors, _ = prune_files_bloom_in(path, "doc_id", [1500])
+    assert survivors == files

@@ -74,12 +74,10 @@ def test_heal_completes_interrupted_swap(spark, tmp_path):
     restore exactly the original rows."""
     import shutil
 
-    from goe_spark.plans.compaction import (
-        _tmp_dir,
-        compact_partitioned_table,
-        heal_interrupted_swaps,
-    )
+    from goe_spark.plans.compaction import compact_partitioned_table
     from goe_spark.plans.metadata import atomic_write_json
+    from goe_spark.plans.swap import heal_interrupted_swaps
+    from goe_spark.plans.swap import tmp_dir as _tmp_dir
 
     target = str(tmp_path / "t")
     df = spark.range(1000).withColumn("goe_part_key", F.lit("a"))
@@ -116,7 +114,8 @@ def test_heal_completes_interrupted_swap(spark, tmp_path):
 def test_markerless_tmp_discarded(spark, tmp_path):
     """Crash BEFORE the marker: the partition is intact and the
     orphan tmp dir is removed, not half-swapped in."""
-    from goe_spark.plans.compaction import _tmp_dir, heal_interrupted_swaps
+    from goe_spark.plans.swap import heal_interrupted_swaps
+    from goe_spark.plans.swap import tmp_dir as _tmp_dir
 
     target = str(tmp_path / "t")
     df = spark.range(100).withColumn("goe_part_key", F.lit("a"))

@@ -62,7 +62,8 @@ def test_delete_heals_interrupted_swap(spark, offloaded_orders):
     delete runs (same healing contract as compaction)."""
     import json
 
-    from goe_spark.plans.compaction import _data_files, _tmp_dir
+    from goe_spark.plans.swap import data_files as _data_files
+    from goe_spark.plans.swap import tmp_dir as _tmp_dir
 
     target, src, _ = offloaded_orders
     part = next(

@@ -246,11 +246,9 @@ def test_partitioned_zorder_heals_crashed_swap(spark, offloaded_orders):
     import os
     import shutil
 
-    from goe_spark.plans.compaction import (
-        _data_files,
-        _marker_path,
-        _tmp_dir,
-    )
+    from goe_spark.plans.swap import data_files as _data_files
+    from goe_spark.plans.swap import marker_path as _marker_path
+    from goe_spark.plans.swap import tmp_dir as _tmp_dir
     from goe_spark.plans.metadata import atomic_write_json
     from goe_spark.plans.zorder import zorder_partitioned_table
 
@@ -276,3 +274,48 @@ def test_partitioned_zorder_heals_crashed_swap(spark, offloaded_orders):
     assert rep.partitions_healed == 1
     assert spark.read.parquet(target).count() == src.count()
     assert not os.path.exists(_marker_path(target, d))
+
+
+def _zordered_parts(spark, target):
+    """2000 rows over two partitions, z-ordered 4 files each."""
+    from goe_spark.plans.zorder import zorder_partitioned_table
+
+    spark.range(2000).select(
+        "id",
+        (F.col("id") * 7 % 1000).alias("x"),
+        F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("goe_part_key"),
+    ).repartition(3).write.partitionBy("goe_part_key").parquet(target)
+    zorder_partitioned_table(spark, target, ["id", "x"], n_files=4)
+
+
+def test_pruned_read_after_compaction_of_zordered_target(spark, tmp_path):
+    """Compaction replaces the z-ordered files; the pruned read must
+    neither name the deleted files nor lose rows."""
+    from goe_spark.plans.compaction import compact_partitioned_table
+    from goe_spark.plans.zorder import read_pruned_partitioned
+
+    target = str(tmp_path / "t")
+    _zordered_parts(spark, target)
+    rep = compact_partitioned_table(spark, target, max_files_per_partition=1)
+    assert rep.partitions_compacted == 2
+
+    df, n_read, n_total = read_pruned_partitioned(
+        spark, target, {"id": (100, 300)}
+    )
+    assert n_read == n_total == 2
+    assert df.where(F.col("id").between(100, 300)).count() == 201
+
+
+def test_pruned_read_keeps_file_appended_after_manifest(spark, tmp_path):
+    """A file written after the manifest build (a merge or HWM append)
+    has no manifest entry and must survive pruning."""
+    path = str(tmp_path / "z")
+    rows = spark.range(2000).select("id", (F.col("id") % 97).alias("x"))
+    write_zordered(rows, path, ["id", "x"], n_files=4)
+    spark.range(2000, 2100).select(
+        "id", (F.col("id") % 97).alias("x")
+    ).coalesce(1).write.mode("append").parquet(path)
+
+    df, n_read, n_total = read_pruned(spark, path, {"id": (None, None)})
+    assert n_read == n_total == 5
+    assert df.count() == 2100
